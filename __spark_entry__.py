@@ -22,11 +22,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """Every registry key that carries a DuckDB oracle, in registration
+    order."""
     return _q.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query key (omitted for non-SQL-expressible
-    ops, which get the weaker rows-only check)."""
+    """DuckDB oracle SQL per query key — the same keys as queries()."""
     return _q.oracle_sql()

@@ -191,7 +191,7 @@ def time_queries(
     spark: SparkSession, sf_dir: str, names: list[str], reps: int
 ) -> dict[str, float]:
     """Min-of-reps cold wall time per query (build + full materialization
-    via noop write — same timer as bench.py, minus the warm cache)."""
+    via noop write, no warm cache)."""
     from world_cup_duckdb_spark.queries import REGISTRY
 
     out: dict[str, float] = {}

@@ -13,15 +13,15 @@ SF_SMOKE = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 #:   integration tier — multi-minute end-to-end lifecycles:
 #:     worldcup DAG 334 s, streaming 138 s, llm_ops 136 s,
 #:     similarity 112 s, properties 115 s, determinism 76 s,
-#:     dedup_index 70 s, harness 62 s, lakehouse 61 s.
+#:     dedup_index 70 s, lakehouse 61 s.
 #:   fast tier (everything else) — ~8 min: test_plans (every registry
 #:     key's plan pins via one shared cold walk, ~250-300 s),
 #:     test_operators 148 s, test_multimodal 19 s,
 #:     test_cache_lifecycle 32 s, test_session 2 s.
 #: Per-commit gate:  python -m pytest tests/ -m "not slow and not integration" -x -q
 #: Pre-push gate:    python -m pytest tests/ -m "not slow" -x -q   (~20 min)
-#: Round gate (driver/judge): no -m filter — nothing is deselected by
-#: default; marking is purely additive.
+#: Full suite: the ROADMAP.md tier-1 command, no -m filter — nothing is
+#: deselected by default; marking is purely additive.
 _SLOW_FILES = {"test_parity.py", "test_scale.py"}
 _INTEGRATION_FILES = {
     "test_worldcup.py",

@@ -15,6 +15,7 @@ from world_cup_duckdb_spark.operators.relational import (
 )
 from world_cup_duckdb_spark.operators.validators import (
     ValidationError,
+    constraint_violations,
     fk_orphans,
     null_pk_rows,
     pk_duplicates,
@@ -47,6 +48,20 @@ def test_null_pk_rows(spark):
     df = spark.createDataFrame([(None, 1), (2, None), (3, 4)], "a int, b int")
     assert null_pk_rows(df, ["a"]).count() == 1
     assert null_pk_rows(df, ["a", "b"]).count() == 2
+
+
+def test_constraint_violations_reports_each_check_in_order(spark):
+    df = spark.createDataFrame(
+        [(1, 10), (1, 10), (None, 99)], "id int, fk int"
+    )
+    parent = spark.createDataFrame([(10,)], "pk int")
+    assert constraint_violations(df, ["id"], [(parent, {"fk": "pk"})]) == [
+        "duplicate primary key ('id',)",
+        "null primary key ('id',)",
+        "orphan foreign key {'fk': 'pk'}",
+    ]
+    clean = df.filter("id = 1").dropDuplicates()
+    assert constraint_violations(clean, ["id"], [(parent, {"fk": "pk"})]) == []
 
 
 def test_validated_write_gates(spark, tmp_path):
@@ -509,50 +524,6 @@ def test_fetch_cached_hit_miss_and_atomic_publish(tmp_path):
     open(stray, "w").write("partial")
     p4, hit4 = fetch_cached(f"file://{src_a}", cache)
     assert hit4 and open(p4).read() == "x,y\n1,2\n"
-
-
-def test_driver_key_order_leads_with_never_verified_keys():
-    """The round driver evaluates queries() in dict order under a bounded
-    budget (~the first 50 keys), so ordering IS coverage policy. Round-3
-    policy: every key the driver already verified in rounds 1-2
-    (DRIVER_VERIFIED) is demoted behind every never-verified key, so each
-    round's sample window lands entirely on keys with no CORRECTNESS row
-    yet."""
-    from world_cup_duckdb_spark.queries import (
-        DRIVER_EXCLUDED,
-        DRIVER_VERIFIED,
-        REGISTRY,
-        queries,
-        oracle_sql,
-    )
-
-    names = list(queries())
-    # The driver-facing export is the registry minus the documented
-    # exclusions (keys that can never go green: no-oracle-by-design),
-    # and every exported key MUST carry an oracle — the r7 contract
-    # that no driver sample can land on a rows-only row again.
-    assert set(names) == set(REGISTRY) - DRIVER_EXCLUDED
-    assert set(oracle_sql()) == set(names)
-    assert DRIVER_EXCLUDED <= set(REGISTRY)
-    # All §2 ops are already driver-green; the verified set must be real
-    # registry keys (a rename upstream would silently shrink coverage).
-    assert DRIVER_VERIFIED <= set(REGISTRY), DRIVER_VERIFIED - set(REGISTRY)
-    n_unverified = len(
-        set(REGISTRY) - DRIVER_VERIFIED - DRIVER_EXCLUDED
-    )
-    head = names[:n_unverified]
-    assert all(n not in DRIVER_VERIFIED for n in head), [
-        n for n in head if n in DRIVER_VERIFIED
-    ]
-    # Every unverified key must sit strictly before every verified key —
-    # the driver's ~50-key window then lands on keys needing evidence for
-    # as long as any remain (DRIVER_VERIFIED derives from the committed
-    # CORRECTNESS files, so this property self-maintains round to round).
-    if n_unverified:
-        first_verified = min(
-            i for i, n in enumerate(names) if n in DRIVER_VERIFIED
-        )
-        assert first_verified == n_unverified, names[:first_verified + 1][-3:]
 
 
 def test_surrogate_key_distributed_equals_global_window(spark):

@@ -5,6 +5,7 @@ from world_cup_duckdb_spark.operators.relational import (
 )
 from world_cup_duckdb_spark.operators.validators import (
     ValidationError,
+    constraint_violations,
     fk_orphans,
     null_pk_rows,
     pk_duplicates,
@@ -13,6 +14,7 @@ from world_cup_duckdb_spark.operators.validators import (
 
 __all__ = [
     "ValidationError",
+    "constraint_violations",
     "diagonal_union",
     "fk_orphans",
     "null_pk_rows",

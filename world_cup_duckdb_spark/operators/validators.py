@@ -70,6 +70,27 @@ def null_pk_rows(df: DataFrame, pk: Sequence[str]) -> DataFrame:
     return df.filter(cond)
 
 
+def constraint_violations(
+    df: DataFrame,
+    pk: Sequence[str] | None = None,
+    fks: Sequence[tuple[DataFrame, dict[str, str]]] = (),
+) -> list[str]:
+    """Audit ``df`` against its declared constraints: PK duplicates and
+    null PKs (when ``pk`` is given), then each ``(parent, on)`` FK in
+    order. Each check is one ``limit(1)`` job; returns one message per
+    violated constraint (empty ⇒ every constraint holds)."""
+    problems: list[str] = []
+    if pk:
+        if pk_duplicates(df, pk).limit(1).count() > 0:
+            problems.append(f"duplicate primary key {tuple(pk)}")
+        if null_pk_rows(df, pk).limit(1).count() > 0:
+            problems.append(f"null primary key {tuple(pk)}")
+    for parent, on in fks:
+        if fk_orphans(df, parent, on).limit(1).count() > 0:
+            problems.append(f"orphan foreign key {on}")
+    return problems
+
+
 def validated_write(
     df: DataFrame,
     path: str,
@@ -85,15 +106,7 @@ def validated_write(
     """
     df = df.cache()
     try:
-        problems: list[str] = []
-        if pk:
-            if pk_duplicates(df, pk).limit(1).count() > 0:
-                problems.append(f"duplicate primary key {tuple(pk)}")
-            if null_pk_rows(df, pk).limit(1).count() > 0:
-                problems.append(f"null primary key {tuple(pk)}")
-        for parent, on in fks:
-            if fk_orphans(df, parent, on).limit(1).count() > 0:
-                problems.append(f"orphan foreign key {on}")
+        problems = constraint_violations(df, pk, fks)
         if problems:
             raise ValidationError("; ".join(problems))
         df.write.format(format).mode(mode).save(path)

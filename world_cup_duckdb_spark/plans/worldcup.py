@@ -865,22 +865,14 @@ def validate_worldcup(tables: dict[str, DataFrame]) -> dict[str, list[str]]:
     table (empty dict ⇒ the build would have loaded cleanly into the
     reference's DuckDB schema)."""
     from world_cup_duckdb_spark.operators.validators import (
-        fk_orphans,
-        null_pk_rows,
-        pk_duplicates,
+        constraint_violations,
     )
 
     problems: dict[str, list[str]] = {}
     for name, (pk, fks) in CONSTRAINTS.items():
-        issues: list[str] = []
-        df = tables[name]
-        if pk_duplicates(df, pk).limit(1).count() > 0:
-            issues.append(f"duplicate PK {pk}")
-        if null_pk_rows(df, pk).limit(1).count() > 0:
-            issues.append(f"null PK {pk}")
-        for on, parent in fks:
-            if fk_orphans(df, tables[parent], on).limit(1).count() > 0:
-                issues.append(f"FK orphans {on} → {parent}")
+        issues = constraint_violations(
+            tables[name], pk, [(tables[parent], on) for on, parent in fks]
+        )
         if issues:
             problems[name] = issues
     return problems

@@ -228,8 +228,8 @@ def ext_bpe_merges16(spark: SparkSession, sf_dir: str) -> DataFrame:
     deeper budget makes the driver row certify the batched trainer's
     sequential-equivalence across multiple candidate pages and
     soundness-cap trims, not just the first one — the oracled evidence
-    class that replaced the driver slot of the no-oracle production
-    entry (queries/__init__.py DRIVER_EXCLUDED)."""
+    class that stands in for the no-oracle production entry
+    ext_bpe_merges_scaled, which queries()/oracle_sql() leave out."""
     d = load_tables(spark, sf_dir)["documents"]
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -261,16 +261,14 @@ def ext_bpe_merges_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pass cost, is what caps vocabulary size, and this is the mode
     that makes ~30k-rule production vocabularies feasible.
 
-    NO SQL ORACLE by design — and therefore EXCLUDED from the
-    driver-facing queries()/oracle_sql() export (queries/__init__.py
-    DRIVER_EXCLUDED, VERDICT r6 item 2): a rows-only row can never go
-    green, so keeping it in the driver order would re-burn one of the
-    ~50 per-round correctness samples forever. It stays in REGISTRY for
-    bench.py and local harnesses. Rationale for the missing oracle: the
-    trainer is iterative with a data-dependent pass structure, and the
-    approx batch order deviates from the unrolled sequential CTE
-    whenever a merge-created pair would have overtaken a later pick —
-    the documented production tradeoff. Its evidence class is pytest:
+    NO SQL ORACLE by design — and therefore absent from the
+    queries()/oracle_sql() export, which carries only oracled keys. It
+    stays in REGISTRY for local harnesses that run it by name.
+    Rationale for the missing oracle: the trainer is iterative with a
+    data-dependent pass structure, and the approx batch order deviates
+    from the unrolled sequential CTE whenever a merge-created pair
+    would have overtaken a later pick — the documented production
+    tradeoff. Its evidence class is pytest:
     exact-mode parity (batched == sequential, adversarial fixtures
     included), approx-mode pass-count and validity bounds, and the
     checkpoint-reset invariance (tests/test_llm_ops.py). Determinism

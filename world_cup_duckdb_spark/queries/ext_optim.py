@@ -128,8 +128,8 @@ def ext_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap broadcast, exact-key broadcast, final) plus a tracked persist
     to stop the key subplan re-deriving per consumer — with one consumer
     the persist and its lifecycle bookkeeping vanish, which also makes
-    the build a pure lazy plan (bench PURE_PLAN tier). Probes are O(1)
-    dense-array bit tests, not map scans and not joins — see
+    the build a pure lazy plan (PURE_PLAN in tests/test_harness.py).
+    Probes are O(1) dense-array bit tests, not map scans and not joins — see
     bloom_semijoin_state's docstring for the measured MapType-lookup
     trap. No distinct on the key set either: s_suppkey is the supplier
     PK, and the bitset build is idempotent to duplicates anyway

@@ -106,16 +106,15 @@ def maintain_day_rollup(
     stream: DataFrame,
     path: str,
     checkpoint: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Continuously maintain the day-grain rollup from an event stream."""
-    writer = (
+    """Maintain the day-grain rollup from an event stream: one
+    availableNow run over every event not yet merged."""
+    return (
         stream.writeStream.foreachBatch(
             lambda b, bid: merge_batch_into_rollup(b, bid, path)
         )
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

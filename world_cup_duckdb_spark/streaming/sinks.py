@@ -26,9 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from world_cup_duckdb_spark.operators.validators import (
     ValidationError,
-    fk_orphans,
-    null_pk_rows,
-    pk_duplicates,
+    constraint_violations,
 )
 
 
@@ -38,7 +36,6 @@ def stream_validated_write(
     checkpoint: str,
     pk: Sequence[str] | None = None,
     fks: Sequence[tuple[DataFrame, dict[str, str]]] = (),
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Audit each micro-batch with the declared constraints, then append.
 
@@ -47,17 +44,9 @@ def stream_validated_write(
     """
 
     def audit_and_append(batch: DataFrame, batch_id: int) -> None:
-        problems: list[str] = []
-        if pk:
-            if pk_duplicates(batch, pk).limit(1).count() > 0:
-                problems.append(f"batch {batch_id}: duplicate PK {tuple(pk)}")
-            if null_pk_rows(batch, pk).limit(1).count() > 0:
-                problems.append(f"batch {batch_id}: null PK {tuple(pk)}")
-        for parent, on in fks:
-            if fk_orphans(batch, parent, on).limit(1).count() > 0:
-                problems.append(f"batch {batch_id}: FK orphans {on}")
+        problems = constraint_violations(batch, pk, fks)
         if problems:
-            raise ValidationError("; ".join(problems))
+            raise ValidationError(f"batch {batch_id}: " + "; ".join(problems))
         # Replay-idempotent publish: each batch OVERWRITES its own
         # hive-style batch_id=N directory, so a crash-replayed batch
         # (foreachBatch is at-least-once) rewrites the same partition
@@ -68,9 +57,9 @@ def stream_validated_write(
             os.path.join(path, f"batch_id={batch_id}")
         )
 
-    writer = stream.writeStream.foreachBatch(audit_and_append).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(audit_and_append)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -14,9 +14,9 @@ ContextCleaner (ADVICE r7, operators/relational.py:_ranged_offsets).
 Lives in its own leaf module so ``operators/*`` can register without
 importing the query registry (queries → operators → tracking; no cycle).
 
-Same single-threaded-driver-loop concurrency contract as
-``_TRACKED_PERSISTS``: the list itself is lock-guarded, but release
-timing assumes the build-then-collect loop the driver and bench run.
+Same single-threaded concurrency contract as ``_TRACKED_PERSISTS``:
+the list itself is lock-guarded, but release timing assumes the
+build-then-collect loop the parity tests and perfbench/ run.
 Releasing a checkpoint a plan still needs FAILS LOUDLY on next use
 (checkpoint blocks are not recomputable) rather than silently returning
 wrong rows — and no registered caller builds two queries before
